@@ -375,10 +375,12 @@ object Main {
         // language, optional C4 rule cleaning, exact dedup, near-dup
         // dedup (keep-first), token-count gate, optional backoff-LM
         // CE gate, optional benchmark decontamination — the chain
-        // qp01/qp06/qp22 verify, productized. Funnel stages cross
-        // Barriers so the counts and the final write never recompute
-        // the chain.
+        // qp01/qp06/qp22 verify, productized. Each stage is a counting
+        // Barrier: its materializing job also yields the stage's row
+        // count, and the final write never recomputes the chain. A
+        // skipped stage passes on the previous stage's frame and count.
         import org.apache.spark.sql.functions.{broadcast, col}
+        import graft.operators.Barrier
         val t = opt("--table").getOrElse("documents")
         val into = opt("--into").getOrElse(s"${t}_curated")
         val minTokens = opt("--min-tokens").map(_.toInt).getOrElse(20)
@@ -392,7 +394,7 @@ object Main {
         // (default `source`: a non-URL string keys by itself,
         // HostDedup's documented fallback). Decision frame is narrow —
         // text never shuffles; the kept ids semi-join back.
-        val hosted = opt("--host-cap") match {
+        val (hosted, nHost) = opt("--host-cap") match {
           case Some(cap) =>
             val urlC = col(opt("--url-col").getOrElse("source"))
             val keep = graft.operators.text.HostDedup.dedupAndCap(
@@ -400,11 +402,10 @@ object Main {
                 org.apache.spark.sql.functions.length(col("text")),
                 cap.toInt)
               .where(col("keep")).select(col("doc_id"))
-            graft.operators.Barrier(docs.join(keep, Seq("doc_id"), "left_semi"))
-          case None => docs
+            Barrier.counting(docs.join(keep, Seq("doc_id"), "left_semi"), None)
+          case None => (docs, n0)
         }
-        val nHost = if (opt("--host-cap").isDefined) hosted.count() else n0
-        val selected = opt("--dsir-lang") match {
+        val (selected, nSel) = opt("--dsir-lang") match {
           case Some(lang) =>
             val k = opt("--dsir-k").map(_.toInt).getOrElse(100)
             val sel = graft.operators.text.ImportanceResample.weights(
@@ -412,41 +413,37 @@ object Main {
                 buckets = 1024, smoothing = 1L)
               .orderBy(col("lr_micro").desc, col("id")).limit(k)
               .select(col("id").as("doc_id"))
-            graft.operators.Barrier(hosted.join(broadcast(sel), Seq("doc_id")))
-          case None => hosted
+            Barrier.counting(hosted.join(broadcast(sel), Seq("doc_id")), None)
+          case None => (hosted, nHost)
         }
-        // skipped stages reuse the adjacent count -- recounting an
-        // identical frame would re-scan the source per skipped stage
-        val nSel = if (opt("--dsir-lang").isDefined) selected.count() else nHost
-        val afterRules =
+        val (afterRules, n1) =
           if (args.contains("--rules"))
-            graft.operators.Barrier(
-              graft.operators.text.RuleClean.clean(selected, col("text")))
-          else selected
-        val n1 = afterRules.count()
-        val curated = graft.operators.Barrier(
-          graft.pipeline.CorpusPipeline.curate(afterRules, minTokens, thr))
-        val n2 = curated.count()
-        val afterLm = opt("--lm-tau") match {
+            Barrier.counting(
+              graft.operators.text.RuleClean.clean(selected, col("text")), None)
+          else (selected, nSel)
+        val (curated, n2) = Barrier.counting(
+          graft.pipeline.CorpusPipeline.curate(afterRules, minTokens, thr), None)
+        val (afterLm, nLm) = opt("--lm-tau") match {
           case Some(tau) =>
             // the context-aware CE gate, trained on the corpus that
             // reaches this stage (the qt52 semantics)
             val scored = graft.operators.text.BackoffLm.score(
               curated, col("text"), col("doc_id"),
               alpha = 0.4, tau = tau.toDouble, minCount = 2)
-            graft.operators.Barrier(
+            Barrier.counting(
               curated.join(scored.where(col("keep"))
-                .select(col("id").as("doc_id")), Seq("doc_id"), "left_semi"))
-          case None => curated
+                .select(col("id").as("doc_id")), Seq("doc_id"), "left_semi"),
+              None)
+          case None => (curated, n2)
         }
-        val nLm = if (opt("--lm-tau").isDefined) afterLm.count() else n2
-        val fin = opt("--bench") match {
+        val (fin, n3) = opt("--bench") match {
           case Some(bt) =>
             val bench = catalogFor(cfg.src).read(spark, bt)
-            val exactClean = graft.operators.Barrier(
+            val (exactClean, nExact) = Barrier.counting(
               graft.operators.text.Decontaminate.dropContaminated(
                 afterLm, col("text"), "doc_id",
-                graft.operators.text.Decontaminate.benchmarkKeys(bench, col("text"))))
+                graft.operators.text.Decontaminate.benchmarkKeys(bench, col("text"))),
+              None)
             if (args.contains("--bench-fuzzy")) {
               // the qd34 leg: paraphrased/perturbed leaks the exact
               // 8-gram pass misses, dropped by MinHash near-dup against
@@ -454,12 +451,11 @@ object Main {
               val dirty = graft.operators.text.Decontaminate
                 .fuzzyContaminatedIds(
                   exactClean, bench, col("text"), col("doc_id"), thr)
-              graft.operators.Barrier(
-                exactClean.join(dirty, Seq("doc_id"), "left_anti"))
-            } else exactClean
-          case None => afterLm
+              Barrier.counting(
+                exactClean.join(dirty, Seq("doc_id"), "left_anti"), None)
+            } else (exactClean, nExact)
+          case None => (afterLm, nLm)
         }
-        val n3 = fin.count()
         sinkFor(cfg.dest, cfg).overwrite(fin, into)
         println(table(Seq(
           Seq("Stage", "Docs"),

@@ -88,6 +88,8 @@ object Barrier {
     * stream itself. A single-consumer frame should keep its one
     * downstream exchange instead. */
   def keyed(df: DataFrame, cols: String*): DataFrame = {
+    // no keys would silently become a round-robin repartition
+    require(cols.nonEmpty, "Barrier.keyed: at least one key column is required")
     // explicit count = the session's shuffle parallelism: what a
     // downstream exchange on these keys would have used, conf-driven
     // (scales with the cluster, stays comparable at local core

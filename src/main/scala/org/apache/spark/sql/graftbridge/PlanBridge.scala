@@ -57,11 +57,22 @@ object PlanBridge {
       boolCol: Option[String]): (DataFrame, Long) = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val session = ds.sparkSession
-    // kill switch for A/B isolation and emergencies: false restores
-    // the UnknownPartitioning behavior of a plain Dataset.checkpoint
-    val surface = session.conf.getOption("spark.graft.barrier.surfaceLayout")
-      .forall(_.toBoolean)
     val qe = ds.queryExecution
+    val logicalOut = ds.logicalPlan.output
+    // the counted column's index is applied positionally to the
+    // physical rows, so it must name exactly one column and the
+    // physical row must have the logical plan's arity
+    val countIdx = boolCol.map { name =>
+      val i = logicalOut.indexWhere(_.name == name)
+      require(i >= 0 && i == logicalOut.lastIndexWhere(_.name == name) &&
+          logicalOut(i).dataType == org.apache.spark.sql.types.BooleanType,
+        s"checkpointCounting: need exactly one boolean column '$name' in " +
+          logicalOut.map(_.name).mkString(", "))
+      require(qe.executedPlan.output.size == logicalOut.size,
+        s"checkpointCounting: physical output arity " +
+          s"${qe.executedPlan.output.size} != logical ${logicalOut.size}")
+      i
+    }
     // mirror Dataset.checkpoint: execute the plan (with AQE this
     // materializes every query stage and fixes the final plan), copy
     // the unsafe rows (the iterator reuses its buffer), checkpoint,
@@ -71,15 +82,9 @@ object PlanBridge {
     // the eager materialization action, counting as it goes; the
     // checkpoint (reliable or local) triggers on this job's completion
     // exactly as it would for Dataset.checkpoint's bare count()
-    val count = boolCol match {
+    val count = countIdx match {
       case None => rdd.count()
-      case Some(name) =>
-        val i = ds.logicalPlan.output.indexWhere(_.name == name)
-        require(i >= 0 &&
-          ds.logicalPlan.output(i).dataType ==
-            org.apache.spark.sql.types.BooleanType,
-          s"checkpointCounting: no boolean column '$name' in " +
-            ds.logicalPlan.output.map(_.name).mkString(", "))
+      case Some(i) =>
         rdd.mapPartitions { it =>
           var c = 0L
           while (it.hasNext) {
@@ -97,7 +102,6 @@ object PlanBridge {
       case c: PartitioningCollection => firstLeaf(c.partitionings.head)
       case other => other
     }
-    val logicalOut = ds.logicalPlan.output
     // physical output attrs map positionally onto the logical output
     // (same association Dataset.checkpoint relies on for stats)
     val attrMap: Map[Expression, Expression] =
@@ -112,9 +116,7 @@ object PlanBridge {
       if (r.references.subsetOf(outSet)) Some(r) else None
     }
     val n = rdd.getNumPartitions
-    val surfaced: Partitioning = (if (surface)
-      firstLeaf(phys.outputPartitioning)
-    else UnknownPartitioning(n)) match {
+    val surfaced: Partitioning = firstLeaf(phys.outputPartitioning) match {
       case hp: HashPartitioning if hp.numPartitions == n =>
         rewriteHash(hp).getOrElse(UnknownPartitioning(n))
       case chp: CoalescedHashPartitioning if chp.numPartitions == n =>

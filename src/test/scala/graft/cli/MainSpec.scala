@@ -535,6 +535,64 @@ class MainSpec extends SparkSpec {
       s"fuzzy pass should drop the paraphrase: ${fuzzyKept.mkString(",")}")
   }
 
+  test("curate prints each funnel stage's count as the size of the frame it names") {
+    import org.apache.spark.sql.functions.{col, length}
+    val out = Files.createTempDirectory("graft_cli_funnel").toString
+    val cfg = writeCfg(
+      s"""src:
+         |  url: parquet:$sf0001
+         |dest:
+         |  url: parquet:$out
+         |""".stripMargin)
+    // runs curate, returns its Stage/Docs table as stage -> docs
+    def funnel(extra: String*): Map[String, Long] = {
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withOut(buf) {
+        assert(Main.run(Array("curate", "--table", "documents", "--into",
+          "kept", "--config", cfg) ++ extra, spark) == 0)
+      }
+      val StageRow = """\| ([a-z+-]+) +\| (\d+) +\|""".r
+      buf.toString("UTF-8").linesIterator.collect {
+        case StageRow(stage, n) => stage -> n.toLong
+      }.toMap
+    }
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    def kept = spark.read.parquet(s"$out/kept.parquet").count()
+    // curate's default --min-tokens and --threshold
+    def curated(df: org.apache.spark.sql.DataFrame) =
+      graft.pipeline.CorpusPipeline.curate(df, 20, 0.3).count()
+
+    // no optional stage: every skipped stage carries the incoming count
+    val plain = funnel()
+    assert(plain.keySet == Set("incoming", "host-dedup+cap", "dsir-select",
+      "rule-clean", "dedup+gate", "lm-gate", "decontaminated"), plain)
+    assert(plain("incoming") == docs.count())
+    assert(plain("host-dedup+cap") == plain("incoming"))
+    assert(plain("dsir-select") == plain("host-dedup+cap"))
+    assert(plain("rule-clean") == plain("dsir-select"))
+    assert(plain("dedup+gate") == curated(docs))
+    assert(plain("lm-gate") == plain("dedup+gate"))
+    assert(plain("decontaminated") == kept)
+
+    // --host-cap on: its row is the capped frame's size, and the
+    // skipped stages after it carry that count, not the incoming one
+    val capped = funnel("--host-cap", "1")
+    val hosted = docs.join(
+      graft.operators.text.HostDedup.dedupAndCap(docs, col("source"),
+          col("text"), "doc_id", length(col("text")), 1)
+        .where(col("keep")).select("doc_id"),
+      Seq("doc_id"), "left_semi")
+    assert(capped("incoming") == docs.count())
+    assert(capped("host-dedup+cap") == hosted.count())
+    assert(capped("host-dedup+cap") < capped("incoming"),
+      "fixture no longer exercises the host cap")
+    assert(capped("dsir-select") == capped("host-dedup+cap"))
+    assert(capped("rule-clean") == capped("dsir-select"))
+    assert(capped("dedup+gate") == curated(hosted))
+    assert(capped("lm-gate") == capped("dedup+gate"))
+    assert(capped("decontaminated") == kept)
+  }
+
   test("mix plans a capped allocation and writes the plan table") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft_mix_out").toString

@@ -2,6 +2,9 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit, sum}
+
 import graft.SparkSpec
 
 class BarrierSpec extends SparkSpec {
@@ -104,5 +107,110 @@ class BarrierSpec extends SparkSpec {
         s"GraphExpand checkpoint accounting changed: $afterHops")
       assert(reach.count() == 4) // 0 + hops 1..3
     } finally spark.conf.unset(Barrier.ConfKey)
+  }
+
+  test("counting rejects a boolean column name that is not unique") {
+    // the count index is positional: an ambiguous name must not
+    // silently count the first of the two `k` columns
+    val twoK = Seq(1).toDF("x").select(lit(true).as("k"), lit(false).as("k"))
+    intercept[IllegalArgumentException](Barrier.counting(twoK, Some("k")))
+    val oneK = Seq(1, 2).toDF("x").select((col("x") > 1).as("k"))
+    assert(Barrier.counting(oneK, Some("k"))._2 == 1)
+  }
+
+  test("keyed with no key columns is rejected, not a round-robin repartition") {
+    intercept[IllegalArgumentException](Barrier.keyed(Seq(1).toDF("x")))
+  }
+
+  // Layout surfacing: a barrier's checkpoint leaf carries the executed
+  // plan's hash partitioning, so keyed consumers downstream plan no
+  // Exchange, and their values match the un-barriered form.
+
+  private lazy val grouped =
+    (1 to 20000).map(i => (i.toLong % 997, i.toLong)).toDF("g", "v")
+
+  private lazy val groupCounts =
+    grouped.groupBy("g").count().withColumnRenamed("count", "c")
+
+  private def exchanges(df: DataFrame): Int =
+    "Exchange (?!SinglePartition)".r
+      .findAllIn(df.queryExecution.executedPlan.toString).size
+
+  private def hashExchanges(df: DataFrame): Int =
+    "Exchange hashpartitioning".r
+      .findAllIn(df.queryExecution.executedPlan.toString).size
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  private def keyedJoin(kb: DataFrame): DataFrame =
+    kb.join(Barrier.keyed(grouped.groupBy("g").agg(sum("v").as("s")), "g"),
+      Seq("g"))
+
+  // the aggregated side is small enough to broadcast, and a broadcast
+  // join plans no hash Exchange whatever layout its inputs surface
+  private def withoutBroadcast(body: => Unit): Unit = {
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val before = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "-1"))
+    try body finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("keyed barrier: groupBy on the key plans no Exchange") {
+    val agg = Barrier.keyed(grouped, "g").groupBy("g").count()
+    assert(exchanges(agg) == 0, agg.queryExecution.executedPlan.toString)
+  }
+
+  test("keyed barrier: a co-partitioned join of two keyed barriers plans no hash Exchange") {
+    withoutBroadcast {
+      val j = keyedJoin(Barrier.keyed(grouped, "g"))
+      val plan = j.queryExecution.executedPlan.toString
+      assert(plan.contains("SortMergeJoin") && hashExchanges(j) == 0, plan)
+    }
+  }
+
+  test("keyed barrier: aggregate values equal the un-keyed ones") {
+    val got = Barrier.keyed(grouped, "g").groupBy("g").count()
+      .withColumnRenamed("count", "c")
+    assert(sameRows(got, groupCounts))
+  }
+
+  test("keyed barrier: a groupBy on a superset of the key elides its Exchange") {
+    val agg = Barrier.keyed(grouped, "g").groupBy("g", "v").count()
+    assert(exchanges(agg) == 0, agg.queryExecution.executedPlan.toString)
+  }
+
+  test("a plain Barrier after an elided join re-surfaces the join's layout") {
+    withoutBroadcast {
+      val j = keyedJoin(Barrier.keyed(grouped, "g"))
+      val agg = Barrier(j.select(col("g"), (col("v") + col("s")).as("w")))
+        .groupBy("g").count()
+      assert(exchanges(agg) == 0, agg.queryExecution.executedPlan.toString)
+    }
+  }
+
+  private def withReliableCheckpoints(body: => Unit): Unit = {
+    spark.conf.set(Barrier.ConfKey,
+      Files.createTempDirectory("graft_ckpt_layout").toString)
+    try body finally spark.conf.unset(Barrier.ConfKey)
+  }
+
+  test("reliable-checkpoint keyed barrier: groupBy on the key plans no Exchange") {
+    withReliableCheckpoints {
+      val agg = Barrier.keyed(grouped, "g").groupBy("g").count()
+      assert(exchanges(agg) == 0, agg.queryExecution.executedPlan.toString)
+    }
+  }
+
+  test("reliable-checkpoint keyed barrier: aggregate values equal the un-keyed ones") {
+    withReliableCheckpoints {
+      val got = Barrier.keyed(grouped, "g").groupBy("g").count()
+        .withColumnRenamed("count", "c")
+      assert(sameRows(got, groupCounts))
+    }
   }
 }
